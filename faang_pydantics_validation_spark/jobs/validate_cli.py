@@ -112,35 +112,39 @@ def main(argv: list[str] | None = None) -> int:
         )
         violations, verdicts_df = res.violations, res.verdicts
 
-    if args.out:
-        os.makedirs(args.out, exist_ok=True)
-        if not args.checkpoint:  # checkpoint mode already wrote parquet
-            violations.write.mode("overwrite").parquet(f"{args.out}/violations")
-            verdicts_df.write.mode("overwrite").parquet(f"{args.out}/verdicts")
-        write_results_json(f"{args.out}/validation_results.json", verdicts_df, violations)
+    try:
+        if args.out:
+            os.makedirs(args.out, exist_ok=True)
+            if not args.checkpoint:  # checkpoint mode already wrote parquet
+                violations.write.mode("overwrite").parquet(f"{args.out}/violations")
+                verdicts_df.write.mode("overwrite").parquet(f"{args.out}/verdicts")
+            write_results_json(f"{args.out}/validation_results.json", verdicts_df, violations)
 
-    rows = [r.asDict() for r in verdicts_df.collect()]
-    n_vio = violations.count()
-    if args.report:
-        from pyspark.sql import functions as F
+        rows = [r.asDict() for r in verdicts_df.collect()]
+        n_vio = violations.count()
+        if args.report:
+            from pyspark.sql import functions as F
 
-        rule_counts = [
-            r.asDict()
-            for r in violations.groupBy("rule_id", "severity")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        ]
-        print(render_report(rows, rule_counts))
-    print(
-        json.dumps(
-            {
-                "partitions": len(rows),
-                "failed": sum(1 for r in rows if r["verdict"] == "fail"),
-                "violations": n_vio,
-                "wall_sec": round(time.time() - t0, 2),
-            }
+            rule_counts = [
+                r.asDict()
+                for r in violations.groupBy("rule_id", "severity")
+                .agg(F.count(F.lit(1)).alias("n"))
+                .collect()
+            ]
+            print(render_report(rows, rule_counts))
+        print(
+            json.dumps(
+                {
+                    "partitions": len(rows),
+                    "failed": sum(1 for r in rows if r["verdict"] == "fail"),
+                    "violations": n_vio,
+                    "wall_sec": round(time.time() - t0, 2),
+                }
+            )
         )
-    )
+    finally:
+        # the batch path persisted its violations for the sinks above
+        violations.unpersist()
     spark.stop()
     return 0
 

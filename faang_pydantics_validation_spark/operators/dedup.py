@@ -429,20 +429,6 @@ def _bucket_cap(
     return banded.join(F.broadcast(hot), on=keys, how="left_anti")
 
 
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 64,
-    shingle_n: int = 3,
-) -> DataFrame:
-    """(id, sig: array<bigint>) — sig[i] = min over shingles of
-    xxhash64(shingle, seed=i). One explode + one groupBy with num_hashes
-    min-aggregates (all algebraic -> map-side combined)."""
-    sh = _shingle_table(df, id_col, text_col, shingle_n, persist=True)
-    return _sigs_from_shingles(sh, num_hashes)
-
-
 def _sigs_from_shingles(
     sh: DataFrame, num_hashes: int, carry: tuple = ()
 ) -> DataFrame:

@@ -194,10 +194,6 @@ def window_rules(
     valid_roles: list[str],
     allowed_transitions: DataFrame | None = None,
     ds: bool = True,
-    contiguity_rule: str = "R_turn_contiguous",
-    monotonic_rule: str = "R_ts_monotonic",
-    transition_rule: str = "R_role_transition",
-    context: DataFrame | None = None,
 ) -> DataFrame:
     """Stable-turn-ordering invariants (north_star): one shuffle on
     conv_id, one window pass, three rules.
@@ -208,103 +204,19 @@ def window_rules(
       allowed-transitions dim (J7/J8 relationship analog); only evaluated
       between contiguous turns whose roles are both known.
 
-    context (optional): carry-in lag rows for incremental/per-partition
-    runs (plans/checkpoint.py) — at most one row per conversation, the
-    LAST turn of that conversation from earlier partitions, with the same
-    (conv_id, turn_idx, [ds,] role, ts) columns. Context rows participate
-    only as lag providers: no violation is ever emitted FOR them. A
-    cross-partition duplicate (partition re-contains a carried tail key —
-    the one duplicate shape per-partition uniqueness cannot see) is
-    detected by KEY MEMBERSHIP: a broadcast semi-join of partition rows
-    against the metadata-sized context keys, NOT lag adjacency — a late
-    out-of-order lower-turn row sorting between the context row and the
-    duplicate would break the lag pairing and hide the duplicate. Emitted
-    once per duplicated key at its first in-partition (ts, ds) occurrence
-    (the uniqueness_rule convention)."""
+    The cross-partition carry-in of checkpointed runs lives in the fused
+    plan (plans/fused.validate_transcripts_fused)."""
     keys = ["conv_id", "turn_idx"] + (["ds"] if ds else [])
-    base = facts.select(*keys, "role", "ts").withColumn("__ctx", F.lit(False))
-    if context is not None:
-        base = base.unionByName(
-            context.select(*keys, "role", "ts").withColumn("__ctx", F.lit(True))
-        )
-    # __ctx DESC leads the sort so the carried tail ALWAYS precedes every
-    # partition row of its conversation — a late-arriving row whose
-    # (turn_idx, ts) would otherwise sort before the tail still pairs
-    # against it and gets its boundary R_ts_monotonic / R_turn_unique /
-    # contiguity verdict instead of silently demoting the tail to a
-    # follower (which the ~__ctx filter would then drop unpaired). With no
-    # context the column is constant False and the order is unchanged.
-    w = Window.partitionBy("conv_id").orderBy(F.desc("__ctx"), "turn_idx", "ts")
-    anno = base.select(
+    w = Window.partitionBy("conv_id").orderBy("turn_idx", "ts")
+    anno = facts.select(
         *keys,
         "role",
         "ts",
-        "__ctx",
         F.lag("turn_idx").over(w).alias("__prev_idx"),
         F.lag("ts").over(w).alias("__prev_ts"),
         F.lag("role").over(w).alias("__prev_role"),
-    ).where(~F.col("__ctx"))
-    contiguous = F.col("turn_idx") == F.col("__prev_idx") + 1
-
-    gaps = _emit(
-        anno.where(F.col("__prev_idx").isNotNull() & (F.col("turn_idx") > F.col("__prev_idx") + 1)),
-        contiguity_rule,
-        "warning",
-        "turn",
-        F.concat(F.col("__prev_idx").cast("string"), F.lit("->"), F.col("turn_idx").cast("string")),
-        ds,
     )
-    nonmono = _emit(
-        anno.where(F.col("__prev_ts").isNotNull() & (F.col("ts") < F.col("__prev_ts"))),
-        monotonic_rule,
-        "error",
-        "turn",
-        F.col("ts"),
-        ds,
-    )
-    out = gaps.unionByName(nonmono)
-
-    if allowed_transitions is not None:
-        known = F.col("role").isin(valid_roles) & F.col("__prev_role").isin(valid_roles)
-        cand = anno.where(contiguous & known).withColumn("__prev_role2", F.col("__prev_role"))
-        bad = cand.join(
-            F.broadcast(
-                allowed_transitions.select(
-                    F.col("prev_role").alias("__prev_role2"), F.col("role")
-                )
-            ),
-            on=["__prev_role2", "role"],
-            how="left_anti",
-        )
-        trans = _emit(
-            bad,
-            transition_rule,
-            "error",
-            "turn",
-            F.concat(F.col("__prev_role2"), F.lit("->"), F.col("role")),
-            ds,
-        )
-        out = out.unionByName(trans)
-    if context is not None:
-        # cross-partition duplicate: this partition re-contains a turn key
-        # already recorded by an earlier partition's tail. Key-membership
-        # semi-join (context is one row per conversation — broadcast-sized
-        # at any scale), immune to lag-adjacency breakage by late
-        # out-of-order rows sorting between the tail and the duplicate.
-        hits = facts.select(*keys, "ts").join(
-            F.broadcast(context.select("conv_id", "turn_idx").distinct()),
-            on=["conv_id", "turn_idx"],
-            how="leftsemi",
-        )
-        if ds:
-            dups = hits.groupBy("conv_id", "turn_idx").agg(
-                F.min_by("ds", F.struct("ts", "ds")).alias("ds")
-            )
-        else:
-            dups = hits.select("conv_id", "turn_idx").distinct()
-        bdup = _emit(dups, "R_turn_unique", "error", "turn", F.lit(2), ds)
-        out = out.unionByName(bdup)
-    return out
+    return _window_rule_emitters(anno, valid_roles, allowed_transitions, ds)
 
 
 def window_rules_salted(

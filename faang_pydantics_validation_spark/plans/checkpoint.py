@@ -19,17 +19,19 @@ AFTER its outputs land, so a kill mid-partition leaves no entry and the
 partition reruns cleanly (outputs are overwritten idempotently).
 
 Cross-partition window semantics: partitions are validated in sorted ds
-order, and each partition's window rules receive the LAST turn per
-conversation from all earlier completed partitions (the `tails` boundary
-state, one row per conversation per partition — metadata-sized at any
-scale) as carry-in lag context. A conversation spanning ds values
-therefore gets the same R_ts_monotonic / R_turn_contiguous /
+order, each on the same fused plan as the batch CLI
+(plans/fused.validate_transcripts_fused), and each receives the LAST turn
+per conversation from all earlier completed partitions (the `tails`
+boundary state, one row per conversation per partition — metadata-sized
+at any scale) as its window_context carry-in. A conversation spanning ds
+values therefore gets the same R_ts_monotonic / R_turn_contiguous /
 R_role_transition verdicts as the non-checkpoint fused run, provided
 partition order respects turn order (late-arriving out-of-order turns are
 flagged at the boundary, not silently re-sorted — the same contract as
-the streaming path). Uniqueness stays partition-scoped here except for
-the boundary-duplicate check the tail context enables; a fully global
-uniqueness pass requires the single fused run.
+the streaming path). Uniqueness stays partition-scoped here except for a
+partition row re-using a carried tail key, which the carry-in's
+whole-key count catches; a fully global uniqueness pass requires the
+single fused run.
 """
 
 from __future__ import annotations
@@ -158,7 +160,7 @@ def run_with_checkpoint(
     reads only partition P's files."""
     from ..operators.schema import TRANSCRIPT_EXPECTED, schema_check
     from . import rulesets
-    from .pipeline import validate_transcripts
+    from .fused import validate_transcripts_fused
 
     declared = expected_schema if expected_schema is not None else TRANSCRIPT_EXPECTED
     sh = schema_contract_hash(declared) if enforce_schema else ""
@@ -180,7 +182,7 @@ def run_with_checkpoint(
         t0 = time.time()
         part_facts = facts.where(F.col(partition_col).cast("string") == part)
         ctx = _load_tail_context(spark, checkpoint_dir, done, part, partition_col)
-        res = validate_transcripts(
+        res = validate_transcripts_fused(
             part_facts,
             dims,
             scalar_rules=rules,

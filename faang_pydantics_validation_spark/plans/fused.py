@@ -19,10 +19,13 @@ __conv_known pre-shuffle (broadcast left join) and the violation is
 emitted on the conversation's first window row (row_number()==1, free
 under the shared sort) — J6 adds no scan, no exchange, no distinct.
 
-Versus plans.pipeline (the composable per-operator path, kept for clarity
-and used by the unit tests): same outputs (asserted equal in
-tests/test_fused.py), ~6x fewer jobs/stages. At 10^12 turns this is the
-difference between one shuffle of the fact table and three.
+This is the only production transcript plan: the batch CLI, serving and
+every checkpointed partition (plans/checkpoint.py, with its window_context
+carry-in) run it. Versus plans.pipeline (the composable per-operator
+build, kept as the test reference): same outputs (asserted equal in
+tests/test_fused.py and tests/test_cross_partition.py), ~6x fewer
+jobs/stages. At 10^12 turns this is the difference between one shuffle
+of the fact table and three.
 
 The window partition key is conv_id, so a hot conversation lands on one
 task; turns/conversation is bounded (~10^4) while partitions hold ~10^7
@@ -101,6 +104,7 @@ def validate_transcripts_fused(
     expected_schema: dict[str, str] | None = None,
     fast_verdicts: bool = False,
     conv_dim_broadcast: bool | None = None,
+    window_context: DataFrame | None = None,
 ) -> ValidationResult:
     """fast_verdicts=True computes the verdict table in ONE action straight
     off the pre-explode wide frame (per-row error/warning flags -> one
@@ -117,7 +121,23 @@ def validate_transcripts_fused(
     conv_dim_broadcast gates the J6 registry join: True forces the
     pre-shuffle broadcast tag, False the post-exchange shuffled-hash tag,
     None (default) auto-picks from Catalyst's size estimate vs
-    spark.sql.autoBroadcastJoinThreshold."""
+    spark.sql.autoBroadcastJoinThreshold.
+
+    window_context: carry-in lag rows for per-partition runs
+    (plans/checkpoint.py) — at most one row per conversation, the LAST
+    turn of that conversation from earlier partitions, with (conv_id,
+    turn_idx, <partition_col>, role, ts). Context rows ride the same
+    exchange and lead their conversation's sort (__ctx desc), so a late
+    row whose (turn_idx, ts) sorts before the carried tail still pairs
+    against it. They act only as lag and key providers: no violation is
+    emitted FOR them, and they never take the conversation's first-row
+    R_conv_known emission or a key's first-of-key R_turn_unique emission
+    from a partition row. A partition row re-using a carried key is a
+    duplicate through the whole-key count, not through lag adjacency, so
+    it is caught even when a late lower-turn row sorts between the two.
+    Needs the classic verdict path (fast_verdicts=False)."""
+    if window_context is not None and fast_verdicts:
+        raise ValueError("window_context needs fast_verdicts=False")
     if scalar_rules is None:
         scalar_rules = rulesets.transcript_scalar_rules()
     if valid_roles is None:
@@ -208,6 +228,18 @@ def validate_transcripts_fused(
         pre_he.alias("__pre_he"),
         pre_hw.alias("__pre_hw"),
     )
+    if window_context is not None:
+        ctx = window_context.select(
+            *(
+                F.col(c)
+                if c in window_context.columns
+                else F.lit(None).cast(slim.schema[c].dataType).alias(c)
+                for c in slim.columns
+            )
+        )
+        slim = slim.withColumn("__ctx", F.lit(False)).unionByName(
+            ctx.withColumn("__ctx", F.lit(True))
+        )
 
     # ---- one fact-sized exchange on conv_id; HashPartitioning(conv_id)
     # satisfies the ClusteredDistribution of every window spec below, AND
@@ -218,7 +250,8 @@ def validate_transcripts_fused(
     # obvious alternative for pick-one-row-per-duplicate, would force a
     # SECOND full sort of the fact stream — measured at ~2x the window
     # stage's wall at 57M rows.)
-    w = Window.partitionBy("conv_id").orderBy("turn_idx", "ts", partition_col)
+    ctx_first = [F.desc("__ctx")] if window_context is not None else []
+    w = Window.partitionBy("conv_id").orderBy(*ctx_first, "turn_idx", "ts", partition_col)
     # uniqueness key is GLOBAL (conv_id, turn_idx) — no ds — matching
     # operators/joins.uniqueness_rule; the emission row is the key's first
     # row in (ts, ds) order (first-of-key ⇔ the lag row belongs to a
@@ -255,7 +288,19 @@ def validate_transcripts_fused(
         F.lead(F.lit(1)).over(w).isNotNull().alias("__has_next"),
         F.count(F.lit(1)).over(w_key).alias("__key_cnt"),
         F.row_number().over(w).alias("__rn"),
+        *(
+            # the conversation's first PARTITION row: nothing or a context
+            # row before it
+            [F.col("__ctx"), F.lag("__ctx", 1, True).over(w).alias("__first")]
+            if window_context is not None
+            else []
+        ),
     )
+    if window_context is None:
+        first_row = F.col("__rn") == 1
+    else:
+        anno = anno.where(~F.col("__ctx"))
+        first_row = F.col("__first")
 
     # post-window rule CONDITIONS, named so the fast-verdict branch can
     # read them as plain booleans (no struct round-trip, no array exists)
@@ -264,7 +309,7 @@ def validate_transcripts_fused(
     if "dim_conversations" in dims:
         # J6: one violation per unknown conversation, emitted on its first
         # window row (row_number shares the existing sort — zero extra cost)
-        conv_unknown = (F.col("__rn") == 1) & F.col("__conv_known").isNull()
+        conv_unknown = first_row & F.col("__conv_known").isNull()
         structs.append(
             F.when(conv_unknown, _vstruct("R_conv_known", "error", F.col("conv_id")))
         )
@@ -275,7 +320,7 @@ def validate_transcripts_fused(
     # which the composable groupBy path emits ONCE for) from emitting per
     # row: lag(turn_idx) is NULL within such a group, and a plain isNull
     # test would read every row as first-of-key.
-    first_of_key = (F.col("__rn") == 1) | ~F.col("__prev_idx").eqNullSafe(F.col("turn_idx"))
+    first_of_key = first_row | ~F.col("__prev_idx").eqNullSafe(F.col("turn_idx"))
     dup_first = (F.col("__key_cnt") > 1) & first_of_key
     structs.append(
         F.when(dup_first, _vstruct("R_turn_unique", "error", F.col("__key_cnt")))

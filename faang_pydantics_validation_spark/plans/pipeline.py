@@ -12,6 +12,10 @@ Shuffle budget at 100 TB (the thing that matters at 1000 executors):
   - window rules: one shuffle on conv_id (hash) — hot conversations are
                   bounded by turns/conv, and AQE skew handling is on
   - verdicts:     one tiny agg on ds
+
+Every production surface (CLI batch and checkpoint runs, serving) runs
+plans/fused.validate_transcripts_fused; this composable per-operator build
+is the reference the fused plan is tested against.
 """
 
 from __future__ import annotations
@@ -54,7 +58,6 @@ def validate_transcripts(
     scalar_rules: list[RuleSpec] | None = None,
     partition_col: str = "ds",
     persist_violations: bool = False,
-    window_context: DataFrame | None = None,
     expected_schema: dict[str, str] | None = None,
 ) -> ValidationResult:
     """Run the full rule suite over a transcripts DataFrame.
@@ -67,11 +70,7 @@ def validate_transcripts(
     persist_violations=True materializes the violation rows once so the
     verdict aggregation (and any later consumer) doesn't recompute the
     whole rule suite — the in-memory analog of the checkpoint writer's
-    write-then-aggregate (plans/checkpoint.py).
-
-    window_context: carry-in lag rows (last turn per conversation from
-    earlier partitions) for incremental runs — see
-    operators/joins.window_rules."""
+    write-then-aggregate (plans/checkpoint.py)."""
     if scalar_rules is None:
         scalar_rules = rulesets.transcript_scalar_rules()
 
@@ -117,7 +116,6 @@ def validate_transcripts(
             facts,
             valid_roles=ROLES,
             allowed_transitions=dims.get("allowed_transitions"),
-            context=window_context,
         ).select(*VIOLATION_COLS)
     )
 

@@ -154,22 +154,3 @@ def compile_row_rules(
     )
     return out
 
-
-def violations_from_flags(
-    df: DataFrame,
-    rules: list[RuleSpec],
-    key_cols: tuple[str, ...] = ("conv_id", "turn_idx"),
-    partition_col: str | None = "ds",
-) -> DataFrame:
-    """Per-row severity flags WITHOUT exploding — feeds the verdict
-    aggregation in the same pass (no second scan).
-
-    Output: (*keys, has_error, has_warning, n_violations)."""
-    keys = list(key_cols) + ([partition_col] if partition_col else [])
-    arr = rules_array(rules).alias("__v")
-    return df.select(*keys, arr).select(
-        *keys,
-        F.exists("__v", lambda x: x["severity"] == "error").alias("has_error"),
-        F.exists("__v", lambda x: x["severity"] == "warning").alias("has_warning"),
-        F.size("__v").alias("n_violations"),
-    )

@@ -84,14 +84,11 @@ def stream_windowed_verdicts(
     """Event-time windowed error/warning counts with a watermark for late
     data. Output (append mode after watermark close): one row per
     (ds, time window)."""
-    from ..rules.compiler import rules_array
+    from ..rules.compiler import rules_flags
 
-    arr = rules_array(rules)
+    he, hw = rules_flags(rules)
     flags = stream.withWatermark("ts", watermark).select(
-        "ds",
-        "ts",
-        F.exists(arr, lambda x: x["severity"] == "error").alias("has_error"),
-        F.exists(arr, lambda x: x["severity"] == "warning").alias("has_warning"),
+        "ds", "ts", he.alias("has_error"), hw.alias("has_warning")
     )
     return flags.groupBy("ds", F.window("ts", window).alias("w")).agg(
         F.count(F.lit(1)).alias("total_turns"),

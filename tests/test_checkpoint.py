@@ -137,3 +137,49 @@ def test_cli_conv_dim_join_shuffle(spark, dataset, tmp_path, monkeypatch):
         dataset[n].write.mode("overwrite").parquet(f"{data_dir}/{n}")
     rc = validate_cli.main(["--input", data_dir, "--conv-dim-join", "shuffle"])
     assert rc == 0
+
+
+def test_cli_batch_leaves_no_persisted_rdd(spark, dataset, tmp_path, monkeypatch):
+    """The batch CLI persists its violations for the parquet sinks, the
+    results JSON and the report; main() must release them before it
+    returns (a long-lived session would otherwise keep one cached
+    violation set per run)."""
+    from pyspark.sql import SparkSession
+
+    from faang_pydantics_validation_spark.jobs import validate_cli
+
+    monkeypatch.setattr(SparkSession, "stop", lambda self: None)
+    data_dir = str(tmp_path / "data_unpersist")
+    dataset["transcripts"].write.mode("overwrite").parquet(f"{data_dir}/transcripts")
+    jsc = spark.sparkContext._jsc
+
+    def persisted():
+        return set(jsc.getPersistentRDDs().keySet().toArray())
+
+    before = persisted()
+    rc = validate_cli.main(
+        ["--input", data_dir, "--out", str(tmp_path / "out_unpersist"), "--report"]
+    )
+    assert rc == 0
+    assert persisted() - before == set()
+
+
+# Spark jobs one run_with_checkpoint over the conftest dataset (4 ds
+# partitions) may launch; measured at local[4] with 4 shuffle partitions
+CHECKPOINT_JOB_BUDGET = 136
+
+
+def test_checkpoint_job_budget(spark, dataset, tmp_path):
+    for df in dataset.values():  # materialize the cached fixture outside the group
+        df.count()
+    sc = spark.sparkContext
+    group = "test_checkpoint_job_budget"
+    sc.setJobGroup(group, "job budget of a 4-partition checkpointed run")
+    try:
+        res = CP.run_with_checkpoint(spark, dataset["transcripts"], dataset, str(tmp_path / "ck"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(res["ran"]) == 4
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert n_jobs <= CHECKPOINT_JOB_BUDGET, n_jobs

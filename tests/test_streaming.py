@@ -123,6 +123,28 @@ def test_windowed_verdicts_stream(spark, tmp_path):
     for ds, n in per_ds_batch.items():
         assert per_ds_stream.get(ds, 0) == n, (ds, per_ds_stream.get(ds), n)
 
+    # warning-only turns: a warning violation and no error on the turn
+    warn_stream = {
+        str(r["ds"]): r["warns"]
+        for r in got.groupBy("ds").agg(F.sum("warning_turns").alias("warns")).collect()
+    }
+    per_turn = compile_row_rules(batch, rules).groupBy("ds", "conv_id", "turn_idx").agg(
+        F.max((F.col("severity") == "error").cast("int")).alias("e"),
+        F.max((F.col("severity") == "warning").cast("int")).alias("w"),
+    )
+    warn_batch = {
+        str(r["ds"]): r["warns"]
+        for r in per_turn.where((F.col("w") == 1) & (F.col("e") == 0))
+        .groupBy("ds")
+        .agg(F.count(F.lit(1)).alias("warns"))
+        .collect()
+    }
+    assert sum(warn_batch.values()) > 0
+    for ds in set(warn_stream) | set(warn_batch):
+        assert warn_stream.get(ds, 0) == warn_batch.get(ds, 0), (
+            ds, warn_stream.get(ds), warn_batch.get(ds)
+        )
+
 
 def test_stream_source_schema_drift_fails_fast(spark, dataset, tmp_path):
     """P17 on the streaming surface: a drifted landing directory raises
